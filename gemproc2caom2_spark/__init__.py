@@ -23,3 +23,7 @@ expressions or Arrow-batched pandas UDFs -- no per-row Python.
 """
 
 __version__ = "0.1.0"
+
+from gemproc2caom2_spark import _zipimport_guard
+
+_zipimport_guard.install()

@@ -7,15 +7,21 @@ guarded on missing inputs.
 
 Production would mmap a KenLM n-gram model per executor; here the model
 is a deterministic char-bigram table trained at import time from an
-embedded seed corpus (no external data). Two implementations with
-identical results:
+embedded seed corpus (no external data). Implementations:
 
-- ``perplexity_udf``      — numpy over Arrow batches (the scale path:
-                            one 95x95 matrix lookup per char, vectorized;
-                            model built once per executor, lazily).
-- ``perplexity_expr_sql`` — pure-SQL unigram variant used only for
-                            oracle cross-checks (bigram tables are
-                            impractical to inline in SQL).
+- ``batch_perplexity``        — numpy over one Arrow batch (the scale
+                                path: one 95x95 matrix lookup per char,
+                                vectorized; model built once per
+                                executor, lazily). curate() calls it
+                                inside its fused perplexity+MinHash
+                                kernel (plans/pipeline.py), and
+                                ``make_perplexity_udf`` wraps it for a
+                                trained matrix.
+- ``perplexity_of``           — the scalar reference the test oracles
+                                and fixture generator score with.
+- ``unigram_surprisal_expr``  — pure-Column unigram proxy that an SQL
+                                oracle can replicate (bigram tables are
+                                impractical to inline in SQL).
 """
 
 from __future__ import annotations
@@ -80,7 +86,7 @@ def _model() -> np.ndarray:
 
 
 def perplexity_of(text: str | None) -> float | None:
-    """Scalar reference implementation (used by tests and the UDF)."""
+    """Scalar reference implementation (the test oracles and fixtures)."""
     if text is None:
         return None
     t = text.lower()
@@ -93,12 +99,19 @@ def perplexity_of(text: str | None) -> float | None:
     return float(math.exp(-ll))
 
 
-@F.pandas_udf(DoubleType())
-def perplexity_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched perplexity: mean char-bigram negative log-likelihood,
-    exponentiated. Nulls and <2-byte docs -> null (missing-input guard).
+def batch_perplexity(texts, logp: np.ndarray | None = None,
+                     char_level: bool = False) -> np.ndarray:
+    """Perplexity of every doc in one Arrow batch — the production body
+    of both scorers (the fused curate() kernel and make_perplexity_udf):
+    mean char-bigram negative log-likelihood, exponentiated. Nulls and
+    docs under 2 chars (after lowercasing, exactly perplexity_of's
+    guard) -> NaN, which crosses Arrow as null.
 
-    Whole-batch vectorization: all docs' bytes are concatenated into ONE
+    ``logp`` defaults to the embedded seed model. ``char_level`` indexes
+    UTF-32 code points (the trained-matrix scorer) instead of UTF-8
+    bytes (the embedded model, like perplexity_of).
+
+    Whole-batch vectorization: all docs' codes are concatenated into ONE
     index array, the bigram log-prob lookup and the per-doc sums run as
     single numpy ops (reduceat), and the one pair that straddles each
     doc boundary is subtracted back out. The earlier per-doc Python loop
@@ -106,37 +119,30 @@ def perplexity_udf(texts: pd.Series) -> pd.Series:
     overhead, not math. Values match perplexity_of to ~1e-12 (same
     logp table; reduceat sums per segment, no cross-doc accumulation),
     far inside the 6-dp rounding the pipeline applies."""
-    logp = _model()
+    if logp is None:
+        logp = _model()
     n = len(texts)
     out = np.full(n, np.nan)
-    bufs = [
-        t.lower().encode("utf-8", errors="replace") if t is not None else b""
-        for t in texts
-    ]
-    lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=n)
-    # validity is CHARACTER length >= 2, exactly like perplexity_of's
-    # `len(t) < 2` guard (byte length would pass a single multi-byte
-    # char here while the scalar returns null — guard parity matters
-    # because the fixture oracle is generated by the scalar)
-    charlens = np.fromiter(
-        (len(t) if t is not None else 0 for t in texts), dtype=np.int64, count=n
-    )
-    valid = charlens >= 2
+    lowered = [t.lower() if isinstance(t, str) else "" for t in texts]
+    valid = np.fromiter((len(t) >= 2 for t in lowered), dtype=bool, count=n)
     if not valid.any():
-        return pd.Series(out)
-    vbufs = [b for b, v in zip(bufs, valid) if v]
-    vlens = lens[valid]
-    cat = np.frombuffer(b"".join(vbufs), dtype=np.uint8).astype(np.int32)
-    idx = _char_index(cat)
+        return out
+    if char_level:
+        bufs = [t.encode("utf-32-le") for t, v in zip(lowered, valid) if v]
+        dtype, width = "<u4", 4
+    else:
+        bufs = [t.encode("utf-8", errors="replace") for t, v in zip(lowered, valid) if v]
+        dtype, width = np.uint8, 1
+    vlens = np.fromiter((len(b) // width for b in bufs), dtype=np.int64, count=len(bufs))
+    idx = _char_index(np.frombuffer(b"".join(bufs), dtype=dtype).astype(np.int32))
     ll = logp[idx[:-1], idx[1:]]  # includes one bogus pair per boundary
     starts = np.zeros(len(vlens), dtype=np.int64)
     np.cumsum(vlens[:-1], out=starts[1:])
     sums = np.add.reduceat(ll, starts)  # segment [s_i, s_{i+1}) sums
     # subtract the boundary pair (last char of doc i, first of doc i+1)
-    boundary = starts[1:] - 1
-    sums[:-1] -= ll[boundary]
+    sums[:-1] -= ll[starts[1:] - 1]
     out[valid] = np.exp(-sums / (vlens - 1))
-    return pd.Series(out)
+    return out
 
 
 # the oracle-SQL regex for the rare-char set; the Spark side counts the
@@ -251,34 +257,12 @@ def load_bigram_logp(spark, path: str) -> np.ndarray:
 
 def make_perplexity_udf(logp: np.ndarray):
     """Arrow-batched scorer over a TRAINED matrix (char-level indexing,
-    matching train_bigram_counts; identical to perplexity_udf on ASCII
-    text — pinned by tests). The matrix (~75 KB) ships in the UDF
+    matching train_bigram_counts; identical to the embedded byte-level
+    model on ASCII text — pinned by tests). The matrix (~75 KB) ships in the UDF
     closure, the per-executor broadcast pattern."""
 
     @F.pandas_udf(DoubleType())
     def _ppl(texts: pd.Series) -> pd.Series:
-        n = len(texts)
-        out = np.full(n, np.nan)
-        bufs = [
-            t.lower().encode("utf-32-le") if isinstance(t, str) else b""
-            for t in texts
-        ]
-        charlens = np.fromiter(
-            (len(b) // 4 for b in bufs), dtype=np.int64, count=n
-        )
-        valid = charlens >= 2
-        if not valid.any():
-            return pd.Series(out)
-        vbufs = [b for b, v in zip(bufs, valid) if v]
-        vlens = charlens[valid]
-        cat = np.frombuffer(b"".join(vbufs), dtype="<u4").astype(np.int32)
-        idx = _char_index(cat)
-        ll = logp[idx[:-1], idx[1:]]
-        starts = np.zeros(len(vlens), dtype=np.int64)
-        np.cumsum(vlens[:-1], out=starts[1:])
-        sums = np.add.reduceat(ll, starts)
-        sums[:-1] -= ll[starts[1:] - 1]
-        out[valid] = np.exp(-sums / (vlens - 1))
-        return pd.Series(out)
+        return pd.Series(batch_perplexity(texts, logp, char_level=True))
 
     return _ppl

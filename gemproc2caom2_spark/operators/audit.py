@@ -87,16 +87,3 @@ def drop_reason_rollup(df: DataFrame, run_id: str) -> DataFrame:
         .withColumn("run_id", F.lit(run_id))
         .select("run_id", "drop_reason", "n_docs")
     )
-
-
-def lineage_rows(
-    df: DataFrame, run_id: str, key_col: str = "url", source_col: str = "warc_ts"
-) -> DataFrame:
-    """Per-document lineage (the PROVENANCE-table analog: which run
-    produced which output from which capture)."""
-    return df.select(
-        F.lit(run_id).alias("run_id"),
-        F.col(key_col).alias("url"),
-        F.col(source_col).cast("string").alias("source"),
-        F.current_timestamp().alias("processed_ts"),
-    )

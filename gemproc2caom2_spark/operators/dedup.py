@@ -109,6 +109,21 @@ def _perm_params(num_perms: int) -> tuple[np.ndarray, np.ndarray]:
     return _PERM_CACHE[num_perms]
 
 
+def minhash_row(hashes, num_perms: int) -> np.ndarray | None:
+    """MinHash signature of one doc's shingle hashes — the production
+    body of every numpy signature kernel (``make_minhash_udf`` and
+    curate()'s fused perplexity+MinHash kernel). Null or empty input ->
+    None (a doc with no shingles has no signature)."""
+    if hashes is None or len(hashes) == 0:
+        return None
+    a, b = _perm_params(num_perms)
+    p = np.int64(MERSENNE_61)
+    # np.mod on int64 matches Spark's pmod (sign of divisor); after
+    # folding to 31 bits, h*a <= 2^62 + b < 2^63: no overflow
+    h = np.mod(np.mod(np.asarray(hashes, dtype=np.int64), p), np.int64((1 << 31) - 1))
+    return ((h[:, None] * a[None, :] + b[None, :]) % p).min(axis=0)
+
+
 def make_minhash_udf(num_perms: int = 128, shingle_k: int = 3):
     """Scale-path signature kernel: numpy over Arrow batches.
 
@@ -117,23 +132,10 @@ def make_minhash_udf(num_perms: int = 128, shingle_k: int = 3):
     boundary carries longs, not strings).
     Output: array<bigint> signature, empty input -> null.
     """
-    a, b = _perm_params(num_perms)
-    p = np.int64(MERSENNE_61)
-    m31 = np.int64((1 << 31) - 1)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _sig(hashes: pd.Series) -> pd.Series:
-        out = []
-        for arr in hashes:
-            if arr is None or len(arr) == 0:
-                out.append(None)
-                continue
-            # np.mod on int64 matches Spark's pmod (sign of divisor);
-            # after folding to 31 bits, h*a <= 2^62 + b < 2^63: no overflow
-            h = np.mod(np.mod(np.asarray(arr, dtype=np.int64), p), m31)
-            perm = (h[:, None] * a[None, :] + b[None, :]) % p
-            out.append(perm.min(axis=0))
-        return pd.Series(out, dtype="object")
+        return pd.Series([minhash_row(h, num_perms) for h in hashes], dtype="object")
 
     return _sig
 
@@ -375,11 +377,12 @@ def _fold_candidates(
     # and duplicate-rate-sized — so an eager localCheckpoint costs one
     # tiny job and turns every downstream branch into a local scan.
     # Same protocol as the boilerplate-hash barrier (dd6) and the
-    # fixpoint's per-round truncation.
-    dup_flags = dup_flags.localCheckpoint(eager=True)
+    # fixpoint's per-round truncation — which is why the "full" path
+    # skips it: resolve_canonical_fixpoint checkpoints its input first.
     if resolve_hops == "full":
         dup_flags = resolve_canonical_fixpoint(dup_flags, key_col)
     else:
+        dup_flags = dup_flags.localCheckpoint(eager=True)
         for _ in range(resolve_hops):
             parent = dup_flags.select(
                 F.col(key_col).alias("_p_key"), F.col("_canon_key").alias("_p_canon")

@@ -21,7 +21,6 @@ import html as _htmllib
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -77,24 +76,4 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     # get a chance to normalize anything
     return pd.Series(
         [extract_text_scalar(b) for b in html], dtype="object", index=html.index
-    )
-
-
-def with_extracted_text(
-    df: DataFrame, html_col: str = "html", text_col: str = "text",
-    out_col: str = "text_extracted",
-) -> DataFrame:
-    """Prefer the stored ``text`` when present, else extract from html —
-    the permissive-input rule (header.get() null tolerance,
-    main_app.py:344-346). Column pruning note: when ``text`` is
-    non-null for a whole file, Parquet never materializes ``html``
-    for those row groups only if the plan avoids referencing it; we
-    accept reading html here because extraction is the stage's job —
-    downstream stages must select away ``html`` immediately.
-    """
-    return df.withColumn(
-        out_col,
-        F.when(F.col(text_col).isNotNull(), F.col(text_col)).otherwise(
-            extract_text_udf(F.col(html_col))
-        ),
     )

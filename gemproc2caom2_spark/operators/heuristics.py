@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from gemproc2caom2_spark.functions import text as TX
@@ -127,11 +127,6 @@ def null_quality_struct() -> Column:
         F.lit(None).cast("double").alias("repeated_line_frac"),
         F.lit(None).cast("double").alias("rare_char_ratio"),
     )
-
-
-def with_quality(df: DataFrame, text_col: str = "text_extracted",
-                 out_col: str = "quality") -> DataFrame:
-    return df.withColumn(out_col, quality_struct(text_col))
 
 
 # Duplicate word-n-gram fraction thresholds (the Gopher repetition

@@ -17,6 +17,11 @@ Execution-cost shape (the part that must survive 100 TB):
   rule costs zero perplexity/minhash work — the early-filtering analog
   of main_app.py:190-196 done by construction, since Catalyst will not
   reorder across opaque UDFs;
+- two Arrow crossings in all (two Python workers per task at most):
+  extract, and ONE fused perplexity+MinHash kernel
+  (``make_perplexity_minhash_udf``) after the repartition — each
+  crossing is a Python worker per task, and a worker task's fixed cost
+  (hundreds of ms) is the largest one in a small curate() run;
 - one explicit salted repartition before the Arrow stages (UDF compute
   skew is NOT covered by AQE skew-join handling);
 - the fat text column dies as early as possible: `html` right after
@@ -32,6 +37,7 @@ Execution-cost shape (the part that must survive 100 TB):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -41,10 +47,10 @@ from gemproc2caom2_spark.functions.hashing import (
     url_normalize,
 )
 from gemproc2caom2_spark.functions.langid import langid_expr
-from gemproc2caom2_spark.functions.perplexity import perplexity_udf
+from gemproc2caom2_spark.functions.perplexity import batch_perplexity
 from gemproc2caom2_spark.functions.scrub import scrub_expr
 from gemproc2caom2_spark.operators.dedup import (
-    make_minhash_udf,
+    minhash_row,
     mark_lsh_duplicates,
     shingle_hashes_expr,
 )
@@ -76,6 +82,34 @@ OUTPUT_COLUMNS = [
 # missing-keyword guards.
 ALL_STAGES = ("collapse", "extract", "langid", "heuristics", "perplexity",
               "scrub", "dedup")
+
+
+PPL_SIG_TYPE = "struct<perplexity double, minhash_sig array<bigint>>"
+
+
+def make_perplexity_minhash_udf(num_perms: int):
+    """curate()'s fused expensive kernel: ONE Arrow crossing per batch
+    computes both the perplexity of each gated doc and the MinHash
+    signature of its shingle hashes (``shingle_hashes_expr`` of the same
+    text, hashed JVM-side) -> PPL_SIG_TYPE. Null text -> null
+    perplexity; null or empty hashes -> null signature.
+
+    The bodies are the production ones (``batch_perplexity``,
+    ``minhash_row``), so the values are those of the separate
+    kernels bit for bit. The perplexity gate on the signature stays in
+    the JVM (see curate()), which is why every doc past the cheap
+    gates gets a signature here, kept or not."""
+
+    @F.pandas_udf(PPL_SIG_TYPE)
+    def _ppl_sig(texts: pd.Series, hashes: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame({
+            "perplexity": batch_perplexity(texts),
+            "minhash_sig": pd.Series(
+                [minhash_row(h, num_perms) for h in hashes], dtype="object"
+            ),
+        })
+
+    return _ppl_sig
 
 
 def cheap_drop_reason(text: Column, q: Column, lang_pred: Column,
@@ -287,13 +321,31 @@ def curate(
     )
 
     # ---- expensive kernels, null-gated on the cheap verdict ----
+    # perplexity and the MinHash signature cross Arrow ONCE, in one
+    # fused kernel over the cheap-gated text (one Python worker per
+    # task instead of two). The JVM keeps the 6-dp rounding and the
+    # exact `perplexity <= max_perplexity` gate on the signature, so a
+    # perplexity drop still never carries a signature into the LSH
+    # fold. Dedup off -> null hashes, so no signature math; perplexity
+    # off -> no kernel and no signatures (a doc is only dedup-eligible
+    # once its perplexity passed).
     gated_text = F.when(F.col("_cheap_reason").isNull(), F.col("text_extracted"))
-    d = d.withColumn(
-        "perplexity",
-        F.round(perplexity_udf(gated_text), 6)
-        if "perplexity" in run
-        else F.lit(None).cast("double"),
-    )
+    if "perplexity" in run:
+        hashes = (
+            shingle_hashes_expr(gated_text, rules.shingle_k)
+            if dedup
+            else F.lit(None).cast("array<bigint>")
+        )
+        kernel = make_perplexity_minhash_udf(rules.num_minhash_perms)
+        d = d.withColumn("_ppl_sig", kernel(gated_text, hashes)).withColumn(
+            "perplexity", F.round(F.col("_ppl_sig.perplexity"), 6)
+        )
+        signature = F.when(
+            F.col("perplexity") <= rules.max_perplexity, F.col("_ppl_sig.minhash_sig")
+        )
+    else:
+        d = d.withColumn("perplexity", F.lit(None).cast("double"))
+        signature = F.lit(None).cast("array<bigint>")
 
     # ---- scrub (byte-identical, JVM regexp chain) ----
     # only docs that survive the cheap gates get scrubbed output: the
@@ -310,22 +362,13 @@ def curate(
         ),
     )
 
+    # text_extracted ends its life here: the verdict below reads
+    # _cheap_reason (already folded from text), so the fat column —
+    # carried for EVERY doc, including 200KB+ max_length drops whose
+    # scrubbed_text is already null — never enters the persist or
+    # the dedup fold-back shuffle
+    d = d.withColumn("minhash_sig", signature).drop("text_extracted", "_ppl_sig")
     if dedup:
-        ppl_ok = F.col("perplexity") <= rules.max_perplexity
-        dedup_text = F.when(
-            F.col("_cheap_reason").isNull() & F.coalesce(ppl_ok, F.lit(False)),
-            F.col("text_extracted"),
-        )
-        sig_udf = make_minhash_udf(rules.num_minhash_perms, rules.shingle_k)
-        d = d.withColumn(
-            "minhash_sig", sig_udf(shingle_hashes_expr(dedup_text, rules.shingle_k))
-        )
-        # text_extracted ends its life here: the verdict below reads
-        # _cheap_reason (already folded from text), so the fat column —
-        # carried for EVERY doc, including 200KB+ max_length drops whose
-        # scrubbed_text is already null — never enters the persist or
-        # the dedup fold-back shuffle
-        d = d.drop("text_extracted")
         # MATERIALIZATION BARRIER. mark_lsh_duplicates forks the plan
         # (the frame joins an aggregate derived from itself); without a
         # barrier Spark recomputes the whole upstream DAG — extract,

@@ -617,7 +617,13 @@ def _ivf_oracle_sql(k: int = 5, n_centroids: int = 16, n_probe: int = 4) -> str:
     """
 
 
-@register("sim3_ivf_topk", _ivf_oracle_sql())
+# sim3's deterministic centroid seeding: the first SIM3_CENTROIDS
+# corpus vectors (vec_id < SIM3_CENTROIDS) — one count for the Spark
+# query and its oracle
+SIM3_CENTROIDS = 16
+
+
+@register("sim3_ivf_topk", _ivf_oracle_sql(n_centroids=SIM3_CENTROIDS))
 def sim3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-k (coarse-quantizer scale path): centroid cells prune
     the corpus, n_probe cells per query get exact cosine ranking. Seeded
@@ -634,12 +640,14 @@ def sim3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = load(spark, sf_dir, "embeddings")
     cents = {
         int(r[0]): [float(x) for x in r[1]]
-        for r in raw.where(F.col("vec_id") < 16)
+        for r in raw.where(F.col("vec_id") < SIM3_CENTROIDS)
         .select("vec_id", "embedding")
         .collect()
     }
     q = raw.where(F.col("vec_id").isin(0, 1, 2))
-    out = ivf_topk(emb, q, k=5, n_centroids=16, n_probe=4, centroids=cents)
+    out = ivf_topk(
+        emb, q, k=5, n_centroids=SIM3_CENTROIDS, n_probe=4, centroids=cents
+    )
     return out.withColumn("rank", F.col("rank").cast("bigint"))
 
 
