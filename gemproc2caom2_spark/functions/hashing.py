@@ -25,6 +25,9 @@ from pyspark.sql import functions as F
 # Mersenne prime 2^61 - 1: modulus for the minhash permutation family
 # (universal hashing h_i(x) = (a_i * x + b_i) mod p).
 MERSENNE_61 = (1 << 61) - 1
+# 2^31 - 1: every hash is folded below it before the multiply, so
+# a_i * x stays inside a bigint
+M31 = (1 << 31) - 1
 
 
 def hex15_hash(col: Column | str) -> Column:
@@ -109,22 +112,30 @@ def salted_partition_key(url: Column | str, n_salts: int = 16) -> Column:
     return F.xxhash64(url_host(c)) + F.pmod(F.xxhash64(c), F.lit(n_salts))
 
 
+def minhash_perm_params(i: int) -> tuple[int, int]:
+    """(a_i, b_i) of the i-th MinHash permutation
+    h -> (a_i * (h mod p mod M31) + b_i) mod p, with p = MERSENNE_61 —
+    the one definition every engine's signature reads (the Column form
+    below, the numpy kernel in operators/dedup.py, the DuckDB oracle
+    SQL). a_i < M31 and b_i < p, so a_i * (h mod M31) + b_i < 2^63:
+    no engine's bigint math overflows.
+    """
+    a = (2 * i + 1) * 0x9E3779B97F4A7C15 % MERSENNE_61 % M31
+    b = (i * 0xC2B2AE3D27D4EB4F + 0x165667B19E3779F9) % MERSENNE_61
+    return a, b
+
+
 def minhash_perm(hash_col: Column, i: int) -> Column:
     """i-th universal-hash permutation of a 64-bit hash column.
 
-    a_i odd, derived deterministically from i; arithmetic kept inside
-    [0, 2^61) so bigint math never overflows in either engine.
+    The hash is folded to 31 bits first so the multiply fits a bigint:
+    xxhash64 output is uniform, so the fold keeps the collision rate at
+    ~2^-31 per shingle pair — fine for 128-perm minhash banding. pmod
+    keeps a negative hash's residues in [0, p), as np.mod does.
     """
-    a = (2 * i + 1) * 0x9E3779B97F4A7C15 % MERSENNE_61
-    b = (i * 0xC2B2AE3D27D4EB4F + 0x165667B19E3779F9) % MERSENNE_61
-    h = F.pmod(hash_col, F.lit(MERSENNE_61))
-    # (a*h + b) mod p would overflow bigint for 61-bit a*h; split a into
-    # 30-bit halves: a*h = (a_hi*h mod p)*2^31 + a_lo*h, each term < 2^61... still
-    # too big for direct bigint multiply. Instead reduce h to 31 bits first:
-    # xxhash64 output is uniform, so folding to 31 bits keeps collision
-    # rate ~2^-31 per shingle pair — fine for 128-perm minhash banding.
-    h31 = F.pmod(h, F.lit((1 << 31) - 1))
-    return F.pmod(h31 * F.lit(a % ((1 << 31) - 1)) + F.lit(b % MERSENNE_61), F.lit(MERSENNE_61))
+    a, b = minhash_perm_params(i)
+    h31 = F.pmod(F.pmod(hash_col, F.lit(MERSENNE_61)), F.lit(M31))
+    return F.pmod(h31 * F.lit(a) + F.lit(b), F.lit(MERSENNE_61))
 
 
 def minhash_signature_sql(shingle_hashes: Column, num_perms: int = 32) -> Column:

@@ -8,10 +8,9 @@ the crawl's ``lang`` column.
 
 Production deployment would load a fastText model per executor
 (module-level lazy singleton, the per-process client-init analog of
-composable.py:111-113); that import is gated. The always-available
-implementation is a deterministic stopword/charset profile classifier
-built from pure Column expressions, so the whole stage is JVM-side and
-SQL-oracle-replicable.
+composable.py:111-113). The implementation here is a deterministic
+stopword/charset profile classifier built from pure Column expressions,
+so the whole stage is JVM-side and SQL-oracle-replicable.
 """
 
 from __future__ import annotations
@@ -99,34 +98,3 @@ def langid_sql(text_expr: str, min_hits: int = 2) -> str:
     # literal CJK range: DuckDB's RE2 has no \uXXXX escapes
     cjk = f"length(regexp_extract_all(lower(coalesce({text_expr}, '')), '{CJK_RE}'))"
     return f"CASE WHEN {cjk} >= 5 THEN 'zh' ELSE {expr_lang} END"
-
-
-def try_fasttext_udf(model_path: str):
-    """Scale-path langid: fastText via Arrow-batched pandas UDF with a
-    per-executor model singleton. Gated: the lib is not in this image.
-    """
-    try:
-        import fasttext  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - environment-dependent
-        raise NotImplementedError(
-            "fasttext not available in this environment; use langid_expr()"
-        ) from exc
-
-    import pandas as pd  # pragma: no cover
-
-    _model = {}
-
-    @F.pandas_udf("string")  # pragma: no cover
-    def _predict(texts: pd.Series) -> pd.Series:
-        if "m" not in _model:
-            _model["m"] = fasttext.load_model(model_path)
-        m = _model["m"]
-        labels = [
-            m.predict(t.replace("\n", " "))[0][0].removeprefix("__label__")
-            if t
-            else "und"
-            for t in texts.fillna("")
-        ]
-        return pd.Series(labels)
-
-    return _predict  # pragma: no cover

@@ -76,12 +76,6 @@ def symbol_ratio(text: Column | str) -> Column:
     return F.when(n > 0, F.length(F.translate(t, _SYMBOL_ALLOWED, "")) / n)
 
 
-def digit_ratio(text: Column | str) -> Column:
-    t = _c(text)
-    n = F.length(t)
-    return F.when(n > 0, F.regexp_count(t, F.lit(r"[0-9]")) / n)
-
-
 def lines(text: Column | str) -> Column:
     """Non-empty trimmed lines as array<string>."""
     return F.filter(
@@ -150,16 +144,3 @@ def char_ngrams(text: Column | str, k: int = 5) -> Column:
     for i in range(1, k):
         gr = F.zip_with(gr, F.slice(chars, 1 + i, m), lambda a, b: F.concat(a, b))
     return F.when(n >= k, gr).otherwise(F.array().cast("array<string>"))
-
-
-def rolling_fingerprint(text: Column | str, k: int = 8, keep: int = 4) -> Column:
-    """Document fingerprint: the ``keep`` smallest hex15 hashes of the
-    char k-grams of the lowercased, whitespace-collapsed text — a
-    winnowing-style sketch, order-insensitive, SQL-replicable.
-    Returns array<bigint> (sorted ascending)."""
-    from gemproc2caom2_spark.functions.hashing import hex15_hash
-
-    norm = F.lower(F.regexp_replace(F.trim(_c(text)), r"\s+", " "))
-    grams = char_ngrams(norm, k)
-    hashes = F.array_distinct(F.transform(grams, hex15_hash))
-    return F.slice(F.array_sort(hashes), 1, keep)

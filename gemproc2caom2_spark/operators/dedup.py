@@ -32,8 +32,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from gemproc2caom2_spark.functions.hashing import (
+    M31,
     MERSENNE_61,
     hex15_hash,
+    minhash_perm_params,
     minhash_signature_sql,
 )
 from gemproc2caom2_spark.functions.text import word_shingles
@@ -90,22 +92,13 @@ _PERM_CACHE: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
 
 def _perm_params(num_perms: int) -> tuple[np.ndarray, np.ndarray]:
-    """Deterministic (a, b) universal-hash parameters, matching
-    functions.hashing.minhash_perm exactly (shared constants)."""
+    """The first ``num_perms`` (a, b) pairs of
+    functions.hashing.minhash_perm_params as int64 arrays."""
     if num_perms not in _PERM_CACHE:
-        # Python-int math (arbitrary precision), then down to int64 —
-        # identical to the constants in functions.hashing.minhash_perm.
-        a = np.array(
-            [(2 * i + 1) * 0x9E3779B97F4A7C15 % MERSENNE_61 % ((1 << 31) - 1)
-             for i in range(num_perms)],
-            dtype=np.int64,
+        a, b = zip(*(minhash_perm_params(i) for i in range(num_perms)))
+        _PERM_CACHE[num_perms] = (
+            np.array(a, dtype=np.int64), np.array(b, dtype=np.int64)
         )
-        b = np.array(
-            [(i * 0xC2B2AE3D27D4EB4F + 0x165667B19E3779F9) % MERSENNE_61
-             for i in range(num_perms)],
-            dtype=np.int64,
-        )
-        _PERM_CACHE[num_perms] = (a, b)
     return _PERM_CACHE[num_perms]
 
 
@@ -120,7 +113,7 @@ def minhash_row(hashes, num_perms: int) -> np.ndarray | None:
     p = np.int64(MERSENNE_61)
     # np.mod on int64 matches Spark's pmod (sign of divisor); after
     # folding to 31 bits, h*a <= 2^62 + b < 2^63: no overflow
-    h = np.mod(np.mod(np.asarray(hashes, dtype=np.int64), p), np.int64((1 << 31) - 1))
+    h = np.mod(np.mod(np.asarray(hashes, dtype=np.int64), p), np.int64(M31))
     return ((h[:, None] * a[None, :] + b[None, :]) % p).min(axis=0)
 
 
@@ -193,6 +186,19 @@ def band_keys_expr(sig: Column | str, bands: int, rows_per_band: int) -> Column:
     )
 
 
+def _pointer_jump(flags: DataFrame, key_col: str, canon_col: str) -> DataFrame:
+    """One pointer-jump round on a thin (key, canon, ...) frame: every
+    pointer is rewritten to its target's pointer (kept when the target
+    has none); other columns ride along. One self-join of longs."""
+    parent = flags.select(
+        F.col(key_col).alias("_p_key"), F.col(canon_col).alias("_p_canon")
+    )
+    return flags.join(parent, flags[canon_col] == parent["_p_key"], "left").select(
+        *[c for c in flags.columns if c != canon_col],
+        F.coalesce(F.col("_p_canon"), F.col(canon_col)).alias(canon_col),
+    )
+
+
 def resolve_canonical_fixpoint(
     pointers: DataFrame, key_col: str, canon_col: str = "_canon_key"
 ) -> DataFrame:
@@ -215,21 +221,11 @@ def resolve_canonical_fixpoint(
     """
     cur = pointers.localCheckpoint(eager=True)
     while True:
-        parent = cur.select(
-            F.col(key_col).alias("_p_key"), F.col(canon_col).alias("_p_canon")
-        )
-        nxt = (
-            cur.withColumnRenamed(canon_col, "_old")
-            .join(parent, F.col("_old") == F.col("_p_key"), "left")
-            .select(
-                key_col,
-                F.coalesce("_p_canon", "_old").alias(canon_col),
-                (F.coalesce("_p_canon", "_old") != F.col("_old")).alias("_chg"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = nxt.where(F.col("_chg")).limit(1).count()
-        cur = nxt.drop("_chg")
+        nxt = _pointer_jump(
+            cur.withColumn("_old", F.col(canon_col)), key_col, canon_col
+        ).localCheckpoint(eager=True)
+        changed = nxt.where(F.col(canon_col) != F.col("_old")).limit(1).count()
+        cur = nxt.drop("_old")
         if changed == 0:
             return cur
 
@@ -384,17 +380,7 @@ def _fold_candidates(
     else:
         dup_flags = dup_flags.localCheckpoint(eager=True)
         for _ in range(resolve_hops):
-            parent = dup_flags.select(
-                F.col(key_col).alias("_p_key"), F.col("_canon_key").alias("_p_canon")
-            )
-            dup_flags = dup_flags.join(
-                parent,
-                dup_flags["_canon_key"] == parent["_p_key"],
-                "left",
-            ).select(
-                key_col,
-                F.coalesce(F.col("_p_canon"), F.col("_canon_key")).alias("_canon_key"),
-            )
+            dup_flags = _pointer_jump(dup_flags, key_col, "_canon_key")
     is_dup = F.col("_canon_key") < F.col(key_col)
     attr_names: list[str] = []
     if canonical_attrs is not None:
@@ -502,7 +488,9 @@ def mark_semantic_duplicates(
     canonical) after ``resolve_hops`` chain resolution.
     """
     from gemproc2caom2_spark.operators.similarity import (
+        _block_cosines,
         _infer_dim,
+        _row_norms,
         np_bucket_udf,
         np_seq_bucket_udf,
     )
@@ -539,18 +527,8 @@ def mark_semantic_duplicates(
         ids = pdf["_id"].to_numpy(dtype=np.int64)
         m = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
         mi = int(np.argmin(ids))
-        vmin = m[mi]
-        if int_exact:
-            dots = m @ vmin
-            norms = np.sqrt(np.einsum("ij,ij->i", m, m))
-            nmin = np.sqrt(float(vmin @ vmin))
-        else:
-            dots = np.cumsum(m * vmin[None, :], axis=1)[:, -1]
-            norms = np.sqrt(np.cumsum(m * m, axis=1)[:, -1])
-            nmin = norms[mi]
-        denom = norms * nmin
-        with np.errstate(divide="ignore", invalid="ignore"):
-            c = dots / denom
+        norms = _row_norms(m, int_exact)
+        c = _block_cosines(m[mi : mi + 1], norms[mi : mi + 1], m, norms, int_exact)[0]
         with np.errstate(invalid="ignore"):
             keep = c >= cut
         return pd.DataFrame(
@@ -913,16 +891,6 @@ def remove_boilerplate_lines(
         id_col, F.coalesce(F.col(out_col), F.lit("")).alias(out_col)
     )
     return out
-
-
-def unpersist_boilerplate_cache(df: DataFrame) -> None:
-    """Kept for API stability: remove_boilerplate_lines no longer
-    attaches a corpus-sized cache (the barrier is a thin
-    localCheckpoint of the boilerplate hash set, released by the
-    context cleaner), so there is nothing to unpersist."""
-    p = getattr(df, "_lines_persisted", None)
-    if p is not None:
-        p.unpersist()
 
 
 def mark_span_overlap(

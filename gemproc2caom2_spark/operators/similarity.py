@@ -211,6 +211,41 @@ def _seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.cumsum(a * b, axis=1)[:, -1]
 
 
+def _row_norms(m: np.ndarray, int_exact: bool) -> np.ndarray:
+    """L2 norm of each row of a (B, dim) float64 matrix: einsum for
+    integer-valued rows (exact under any summation order, as in
+    np_int_cosine_udf), else the sequential ``_seq_dot`` order of the
+    Column fold (as in np_seq_cosine_udf)."""
+    return np.sqrt(np.einsum("ij,ij->i", m, m) if int_exact else _seq_dot(m, m))
+
+
+def _block_cosines(
+    blk: np.ndarray,
+    blk_norms: np.ndarray,
+    m: np.ndarray,
+    norms: np.ndarray,
+    int_exact: bool,
+) -> np.ndarray:
+    """(len(blk), len(m)) cosines of every row of ``blk`` against every
+    row of ``m`` — the bucket kernels' one scoring body. Integer-valued
+    rows: one matmul (exact below 2^53 under any order). Float rows:
+    the ``_seq_dot`` products and left-to-right prefix scan, blocked
+    over ``m`` so the (b, chunk, dim) product tensor stays a few MB —
+    blocking never changes a value. Zero norms divide to nan, which
+    fails every >= compare."""
+    if int_exact:
+        dots = blk @ m.T
+    else:
+        bm = max(1, 4_000_000 // max(1, len(blk) * m.shape[1]))
+        dots = np.empty((len(blk), len(m)))
+        for t in range(0, len(m), bm):
+            chunk = m[t : t + bm]
+            prods = blk[:, None, :] * chunk[None, :, :]
+            dots[:, t : t + len(chunk)] = np.cumsum(prods, axis=2)[:, :, -1]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dots / (blk_norms[:, None] * norms[None, :])
+
+
 def np_seq_cosine_udf():
     """Vectorized cosine for FLOAT-VALUED vectors that reproduces the
     sequential Column-fold arithmetic (dot_expr / (norm_expr * norm_expr))
@@ -444,7 +479,7 @@ def load_ivf_model(spark, path: str) -> dict[int, list[float]]:
     return {int(r.cid): [float(x) for x in r.cvec] for r in rows}
 
 
-def _bucket_pair_kernel(threshold: float, dim: int, int_exact: bool):
+def _bucket_pair_kernel(threshold: float, int_exact: bool):
     """Per-bucket all-pairs cosine kernel for ``embedding_near_dup_pairs``
     (groupBy(bucket).applyInPandas): inside one bucket group, score every
     id1 < id2 pair and emit only rows with raw cosine >= threshold - 1e-6
@@ -461,16 +496,15 @@ def _bucket_pair_kernel(threshold: float, dim: int, int_exact: bool):
     (|C| * tables rows, linear), pairs exist only inside numpy, and
     only threshold survivors are ever emitted as rows.
 
-    Bit-exactness: the int path scores with one float64 matmul —
-    integer-valued products/sums below 2^53 are exact under ANY
-    summation order (np_bucket_udf's argument), so values equal
-    np_int_cosine_udf's einsum bit-for-bit. The float path reproduces
-    the sequential Column-fold order via cumsum (np_seq_cosine_udf /
-    ``_seq_dot``): blocked (rows x chunk x dim) products, prefix-scan
-    along dim — identical IEEE op sequence per pair. Norms: einsum
-    (int) / cumsum (float), matching the respective scalar kernels.
-    Zero-norm vectors divide to nan, which fails the >= cut compare —
-    same null semantics as the scalar kernels' guarded divisions.
+    Bit-exactness: scores come from ``_row_norms`` and
+    ``_block_cosines`` — for integer-valued vectors one float64 matmul,
+    exact below 2^53 under ANY summation order (np_bucket_udf's
+    argument), so values equal np_int_cosine_udf's einsum bit-for-bit;
+    for float vectors the sequential Column-fold order of
+    np_seq_cosine_udf / ``_seq_dot``, the identical IEEE op sequence
+    per pair. Zero-norm vectors divide to nan, which fails the >= cut
+    compare — same null semantics as the scalar kernels' guarded
+    divisions.
     """
     cut = threshold - 1e-6
     empty = {
@@ -488,10 +522,7 @@ def _bucket_pair_kernel(threshold: float, dim: int, int_exact: bool):
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
         m = np.asarray(pdf["_v"].to_numpy()[order].tolist(), dtype=np.float64)
-        if int_exact:
-            norms = np.sqrt(np.einsum("ij,ij->i", m, m))
-        else:
-            norms = np.sqrt(np.cumsum(m * m, axis=1)[:, -1])
+        norms = _row_norms(m, int_exact)
         out1: list[np.ndarray] = []
         out2: list[np.ndarray] = []
         outc: list[np.ndarray] = []
@@ -499,21 +530,10 @@ def _bucket_pair_kernel(threshold: float, dim: int, int_exact: bool):
         # block the row side so the (ba, n) dots matrix stays ~64 MB even
         # for a mega-bucket — blocking never changes the values
         ba = max(16, min(512 if int_exact else 32, 8_000_000 // max(n, 1)))
-        bm = max(1, 4_000_000 // (ba * dim))
         for s in range(0, n, ba):
             blk = m[s : s + ba]
             b = len(blk)
-            if int_exact:
-                dots = blk @ m.T
-            else:
-                dots = np.empty((b, n))
-                for t in range(0, n, bm):
-                    chunk = m[t : t + bm]
-                    prods = blk[:, None, :] * chunk[None, :, :]
-                    dots[:, t : t + len(chunk)] = np.cumsum(prods, axis=2)[:, :, -1]
-            denom = norms[s : s + b, None] * norms[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                c = dots / denom
+            c = _block_cosines(blk, norms[s : s + b], m, norms, int_exact)
             rows = np.arange(s, s + b)
             mask = col_idx[None, :] > rows[:, None]
             with np.errstate(invalid="ignore"):
@@ -598,7 +618,7 @@ def embedding_near_dup_pairs(
         F.explode(bucket_arr).alias("_bucket"),
     )
     pairs = exploded.groupBy("_bucket").applyInPandas(
-        _bucket_pair_kernel(threshold, dim, int_exact),
+        _bucket_pair_kernel(threshold, int_exact),
         "id1 long, id2 long, cosine double",
     )
     return (

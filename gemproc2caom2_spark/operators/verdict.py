@@ -31,6 +31,46 @@ DROP_PRECEDENCE = (
 )
 
 
+def _text_gates(
+    text: Column, q: Column, lang_pred: Column, rules: RuleConfig
+) -> list[tuple[str, Column]]:
+    """The nine text-derived gates — every DROP_PRECEDENCE entry except
+    ``rejected`` (an input flag) and the two model gates — as
+    (reason, predicate) pairs in precedence order. ``q`` is the quality
+    struct from heuristics.quality_struct."""
+    return [
+        ("empty", text.isNull() | (F.length(text) == 0)),
+        ("min_length", q.getField("doc_len") < rules.min_doc_len),
+        ("max_length", q.getField("doc_len") > rules.max_doc_len),
+        ("min_words", q.getField("n_words") < rules.min_words),
+        ("placeholder", placeholder_flag(text, rules)),
+        ("langid", ~lang_pred.isin(*rules.target_langs)),
+        ("symbol_ratio", q.getField("symbol_ratio") > rules.max_symbol_ratio),
+        ("rare_chars", q.getField("rare_char_ratio") > rules.max_rare_char_ratio),
+        ("repeated_lines",
+         q.getField("repeated_line_frac") > rules.max_repeated_line_frac),
+    ]
+
+
+def first_failing(checks: list[tuple[str, Column]]) -> Column:
+    """Name of the first check whose predicate holds; null => keep.
+    Null-safe: a predicate that could not be computed (null) does not
+    fire (the reference's fire-only-when-inputs-present rule)."""
+    expr = F.lit(None).cast("string")
+    for name, cond in reversed(checks):
+        expr = F.when(F.coalesce(cond, F.lit(False)), F.lit(name)).otherwise(expr)
+    return expr
+
+
+def cheap_drop_reason(
+    text: Column, q: Column, lang_pred: Column, rules: RuleConfig
+) -> Column:
+    """First failing text gate — the verdict chain minus ``rejected``
+    and the perplexity/duplicate gates, so it is decidable without an
+    Arrow stage."""
+    return first_failing(_text_gates(text, q, lang_pred, rules))
+
+
 def drop_reason_expr(
     q: Column,
     lang_pred: Column,
@@ -40,37 +80,19 @@ def drop_reason_expr(
     text: Column,
     rules: RuleConfig = DEFAULT_RULES,
 ) -> Column:
-    """First-failing-rule drop reason; null => keep.
-
-    ``q`` is the quality struct from heuristics.quality_struct.
-    Null-safe: a metric that could not be computed (null) does not fire
-    its gate (the reference's fire-only-when-inputs-present rule).
-    """
-    doc_len = q.getField("doc_len")
-    n_words = q.getField("n_words")
-    sym = q.getField("symbol_ratio")
-    rep = q.getField("repeated_line_frac")
-    rare = q.getField("rare_char_ratio")
-
-    checks: list[tuple[str, Column]] = [
-        ("empty", text.isNull() | (F.length(text) == 0)),
+    """Full first-failing-rule drop reason (``first_failing``); null =>
+    keep. ``rejected`` follows ``empty``; perplexity and duplicate come
+    last."""
+    empty, *rest = _text_gates(text, q, lang_pred, rules)
+    checks = [
+        empty,
         ("rejected", F.coalesce(is_rejected, F.lit(False))),
-        ("min_length", doc_len < rules.min_doc_len),
-        ("max_length", doc_len > rules.max_doc_len),
-        ("min_words", n_words < rules.min_words),
-        ("placeholder", placeholder_flag(text, rules)),
-        ("langid", ~lang_pred.isin(*rules.target_langs)),
-        ("symbol_ratio", sym > rules.max_symbol_ratio),
-        ("rare_chars", rare > rules.max_rare_char_ratio),
-        ("repeated_lines", rep > rules.max_repeated_line_frac),
+        *rest,
         ("perplexity", perplexity > rules.max_perplexity),
         ("duplicate", F.coalesce(is_duplicate, F.lit(False))),
     ]
     assert tuple(name for name, _ in checks) == DROP_PRECEDENCE
-    expr = F.lit(None).cast("string")
-    for name, cond in reversed(checks):
-        expr = F.when(F.coalesce(cond, F.lit(False)), F.lit(name)).otherwise(expr)
-    return expr
+    return first_failing(checks)
 
 
 def with_verdict(

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemproc2caom2_spark.operators.audit import drop_reason_rollup, partition_metrics
-from gemproc2caom2_spark.plans.pipeline import curate, unpersist_curate_cache
+from gemproc2caom2_spark.plans.pipeline import ALL_STAGES, curate, unpersist_curate_cache
 from gemproc2caom2_spark.operators.heuristics import DEFAULT_RULES, RuleConfig
 
 _MARKER = "_COMMITTED"
@@ -296,7 +296,7 @@ def run_incremental(
         rules=rules,
         num_partitions=num_partitions,
         emit_bands=True,
-        dedup=dedup,
+        stages=ALL_STAGES if dedup else tuple(s for s in ALL_STAGES if s != "dedup"),
     )
     curated = base
 

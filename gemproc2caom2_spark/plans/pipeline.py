@@ -38,6 +38,7 @@ Execution-cost shape (the part that must survive 100 TB):
 from __future__ import annotations
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -58,10 +59,10 @@ from gemproc2caom2_spark.operators.extract import extract_text_udf
 from gemproc2caom2_spark.operators.heuristics import (
     DEFAULT_RULES,
     RuleConfig,
-    placeholder_flag,
     null_quality_struct,
     quality_struct,
 )
+from gemproc2caom2_spark.operators.verdict import cheap_drop_reason
 
 # verdict output columns (the flat CAOM2-Observation analog, SURVEY §1.1;
 # `lineage` is the PROVENANCE-BINTABLE analog: array<struct<url,rel>> —
@@ -112,29 +113,6 @@ def make_perplexity_minhash_udf(num_perms: int):
     return _ppl_sig
 
 
-def cheap_drop_reason(text: Column, q: Column, lang_pred: Column,
-                      rules: RuleConfig) -> Column:
-    """The Column-expr-only prefix of the verdict precedence chain —
-    everything decidable without an Arrow stage. Must agree with
-    operators.verdict.DROP_PRECEDENCE prefix ordering."""
-    checks = [
-        ("empty", text.isNull() | (F.length(text) == 0)),
-        ("min_length", q.getField("doc_len") < rules.min_doc_len),
-        ("max_length", q.getField("doc_len") > rules.max_doc_len),
-        ("min_words", q.getField("n_words") < rules.min_words),
-        ("placeholder", placeholder_flag(text, rules)),
-        ("langid", ~lang_pred.isin(*rules.target_langs)),
-        ("symbol_ratio", q.getField("symbol_ratio") > rules.max_symbol_ratio),
-        ("rare_chars", q.getField("rare_char_ratio") > rules.max_rare_char_ratio),
-        ("repeated_lines",
-         q.getField("repeated_line_frac") > rules.max_repeated_line_frac),
-    ]
-    expr = F.lit(None).cast("string")
-    for name, cond in reversed(checks):
-        expr = F.when(F.coalesce(cond, F.lit(False)), F.lit(name)).otherwise(expr)
-    return expr
-
-
 def _prior_capture_entries() -> Column:
     """Lineage entries for captures discarded by the recapture collapse:
     {url: '<url>@<iso-ts>', rel: 'prior_capture'} per prior capture —
@@ -162,22 +140,20 @@ def curate(
     df: DataFrame,
     rules: RuleConfig = DEFAULT_RULES,
     num_partitions: int | None = None,
-    dedup: bool = True,
-    persist_for_dedup: bool = True,
     stages: tuple[str, ...] = ALL_STAGES,
     emit_bands: bool = False,
 ) -> DataFrame:
     """Full curation DAG over an input-schema DataFrame
     (url, warc_ts, html, text, lang) -> OUTPUT_COLUMNS.
 
-    ``stages`` selects the stage subset (task_types analog); ``dedup``
-    is an additional master switch for the dedup stage (back-compat).
+    ``stages`` selects the stage subset (task_types analog; leave out
+    ``"dedup"`` to skip the LSH stage and its persist barrier).
     ``emit_bands`` appends an ``lsh_bands array<long>`` column (the LSH
     band bucket keys) so the checkpoint ledger can dedup ACROSS runs —
     a new batch anti-joins its buckets against committed ones
     (plans/checkpoint.py)."""
     run = set(stages)
-    dedup = dedup and "dedup" in run
+    dedup = "dedup" in run
     persisted: DataFrame | None = None
     from gemproc2caom2_spark.operators.heuristics import ANALYSIS_CAP
 
@@ -381,12 +357,9 @@ def curate(
         # cluster scale the equivalent is staging this frame to a
         # table/checkpoint before the dedup join — same protocol as
         # plans/checkpoint.py.)
-        if persist_for_dedup:
-            from pyspark import StorageLevel
-
-            d = d.persist(StorageLevel.MEMORY_AND_DISK)
-            d.count()
-            persisted = d
+        d = d.persist(StorageLevel.MEMORY_AND_DISK)
+        d.count()
+        persisted = d
         # ---- LSH dedup + lineage enrichment (J5 analog): explode
         # bands -> fold back happens inside mark_lsh_duplicates; the
         # canonical doc's url (member-metadata propagation,
@@ -423,12 +396,10 @@ def curate(
         ).drop("_priors")
 
     # ---- verdict ----
-    # _cheap_reason IS the text-derived prefix of DROP_PRECEDENCE
-    # (empty .. repeated_lines; 'rejected' is fixed false in this DAG),
-    # so the full chain reduces to a coalesce with the two expensive
-    # gates — the verdict never rescans text (ordering pinned by the
-    # DROP_PRECEDENCE assertion in operators/verdict.py; batch-equality
-    # with drop_reason_expr is pinned by the golden suite)
+    # _cheap_reason is operators.verdict's text-gate fold, i.e.
+    # drop_reason_expr minus 'rejected' (fixed false in this DAG) and
+    # the two expensive gates, so the full chain reduces to a coalesce
+    # with those two — the verdict never rescans text
     reason = F.coalesce(
         F.col("_cheap_reason"),
         F.when(F.col("perplexity") > rules.max_perplexity, F.lit("perplexity")),
@@ -468,7 +439,7 @@ def curate(
 
 def unpersist_curate_cache(df: DataFrame) -> None:
     """Release the dedup-barrier cache attached to a curate() result.
-    No-op for frames without one (dedup off / persist_for_dedup=False)."""
+    No-op for frames without one (stages without ``"dedup"``)."""
     p = getattr(df, "_curate_persisted", None)
     if p is not None:
         p.unpersist()

@@ -7,10 +7,17 @@ Registered into the same registry as plans.queries.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gemproc2caom2_spark.functions.hashing import MERSENNE_61, hex15_hash, hex15_hash_sql
+from gemproc2caom2_spark.functions.hashing import (
+    M31,
+    MERSENNE_61,
+    hex15_hash,
+    hex15_hash_sql,
+    minhash_perm_params,
+    minhash_signature_sql,
+)
 from gemproc2caom2_spark.functions.langid import langid_expr, langid_sql
 from gemproc2caom2_spark.functions.scrub import scrub_expr, scrub_sql
 from gemproc2caom2_spark.functions import text as TX
@@ -27,8 +34,6 @@ from gemproc2caom2_spark.plans.queries import load, register
 # whitespace words of lower(text), DuckDB side (trim strips spaces only,
 # matching Spark F.trim semantics)
 _SQL_WORDS = "regexp_split_to_array(trim(lower(text)), '\\s+')"
-
-_M31 = (1 << 31) - 1
 
 # oracle fixture paths — repo-relative, not hardcoded: this module lives
 # at <repo>/gemproc2caom2_spark/plans/, fixtures at <repo>/tests/fixtures/
@@ -48,13 +53,6 @@ _QLR_FIXTURE = _os.path.join(_FIXTURE_DIR, "quality_lr_weights.parquet")
 _BPE_FIXTURE = _os.path.join(_FIXTURE_DIR, "bpe_merges.parquet")
 _BPE_ENCODE_FIXTURE = _os.path.join(_FIXTURE_DIR, "bpe_encoded.parquet")
 _ZRATIO_FIXTURE = _os.path.join(_FIXTURE_DIR, "compression_ratio.parquet")
-
-
-def _perm_ab(i: int) -> tuple[int, int]:
-    """Same universal-hash constants as functions.hashing.minhash_perm."""
-    a = (2 * i + 1) * 0x9E3779B97F4A7C15 % MERSENNE_61 % _M31
-    b = (i * 0xC2B2AE3D27D4EB4F + 0x165667B19E3779F9) % MERSENNE_61
-    return a, b
 
 
 # ===========================================================================
@@ -92,9 +90,9 @@ def _minhash16_sql_expr() -> str:
     shingle_hash = hex15_hash_sql("s")
     mins = []
     for i in range(16):
-        a, b = _perm_ab(i)
+        a, b = minhash_perm_params(i)
         mins.append(
-            f"list_min(list_transform(hs, h -> ((h % {MERSENNE_61}) % {_M31} * {a} + {b}) % {MERSENNE_61}))"
+            f"list_min(list_transform(hs, h -> ((h % {MERSENNE_61}) % {M31} * {a} + {b}) % {MERSENNE_61}))"
         )
     return (
         "list_transform(["
@@ -143,36 +141,28 @@ def dd2_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage into 8 s; guide §4.4's duplicated-evaluation trap, on a
     filter pushed below the parallelizing exchange).
 
-    Bit-exactness: all operands are positive int64 (hex15 < 2^60 < M61;
-    h%M31 * a < 2^62, + b < 2^63), so numpy's % equals Spark's % and the
-    mins are integer-identical; str(int64) equals the bigint->string
-    cast; null-for-empty equals the old size filter exactly
-    (size(null) is null, never > 0)."""
-    import numpy as _np
+    Bit-exactness: the kernel body is the pipeline's ``minhash_row``;
+    every hash is non-negative (hex15 < 2^60 < M61), so its np.mod
+    equals the oracle's % and the mins are integer-identical;
+    str(int64) equals the bigint->string cast; null-for-empty equals
+    the old size filter exactly (size(null) is null, never > 0)."""
     import pandas as _pd
+
+    from gemproc2caom2_spark.operators.dedup import minhash_row
 
     d = load(spark, sf_dir, "documents", spread=True)
     shingles = TX.word_shingles(F.lower(F.col("text")), k=2)
     hashes = F.transform(F.array_distinct(shingles), hex15_hash)
 
-    a = _np.array([_perm_ab(i)[0] for i in range(16)], dtype=_np.int64)
-    b = _np.array([_perm_ab(i)[1] for i in range(16)], dtype=_np.int64)
-    p = _np.int64(MERSENNE_61)
-    m31 = _np.int64(_M31)
-
     # no type hints: under `from __future__ import annotations` they
     # become strings pyspark's hint parser can't resolve against this
     # closure; hint-less defaults to the scalar pandas UDF, same thing
     def _minhash_csv_fn(hs):
-        out = []
-        for arr in hs:
-            if arr is None or len(arr) == 0:
-                out.append(None)
-                continue
-            h = _np.asarray(arr, dtype=_np.int64) % p % m31
-            mins = ((h[:, None] * a[None, :] + b[None, :]) % p).min(axis=0)
-            out.append(",".join(str(int(x)) for x in mins))
-        return _pd.Series(out, dtype="object")
+        sigs = (minhash_row(arr, 16) for arr in hs)
+        return _pd.Series(
+            [None if sig is None else ",".join(map(str, sig.tolist())) for sig in sigs],
+            dtype="object",
+        )
 
     _minhash_csv = F.pandas_udf(_minhash_csv_fn, "string").asNondeterministic()
 
@@ -1091,8 +1081,8 @@ def tx3_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tx4_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style document fingerprint: 4 smallest hex15 hashes of
-    char 8-grams of normalized text (functions.text.rolling_fingerprint
-    semantics).
+    the distinct char 8-grams (functions.text.char_ngrams) of the
+    lowercased, whitespace-collapsed text.
 
     r6 shape: the char-gram construction and per-gram md5 stay JVM-side;
     the distinct/sort/keep-4/join step runs in one Arrow kernel whose
@@ -1311,6 +1301,7 @@ def cur2_heuristic_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     except the Arrow perplexity stage and corpus-level dedup), applied
     to the documents table — fully oracle-checkable keep/drop + scrub."""
     from gemproc2caom2_spark.operators.heuristics import DEFAULT_RULES, quality_struct
+    from gemproc2caom2_spark.operators.verdict import first_failing
 
     rules = DEFAULT_RULES
     d = load(spark, sf_dir, "documents", spread=True)
@@ -1318,6 +1309,8 @@ def cur2_heuristic_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang = langid_expr("text")
     d = d.select("doc_id", "text", q.alias("q"), lang.alias("lang_pred"))
     text = F.col("text")
+    # not verdict's gate list: this oracle looks for the placeholder
+    # markers in the WHOLE text, the curate() gate in the capped prefix
     placeholder = F.lower(text).contains("lorem ipsum") | F.lower(text).contains(
         "under construction"
     )
@@ -1330,9 +1323,7 @@ def cur2_heuristic_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("langid", F.col("lang_pred") != "en"),
         ("symbol_ratio", F.col("q.symbol_ratio") > rules.max_symbol_ratio),
     ]
-    reason = F.lit(None).cast("string")
-    for name, cond in reversed(checks):
-        reason = F.when(F.coalesce(cond, F.lit(False)), F.lit(name)).otherwise(reason)
+    reason = first_failing(checks)
     return d.select(
         "doc_id",
         "lang_pred",
@@ -1412,7 +1403,7 @@ def cur3_flagship_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/gen_fixtures.py; the reference's golden-regeneration pattern,
     tests/test_main_app.py:171-186). Dedup is off here (cluster-level
     LSH on xxhash64 is not SQL-replicable; cur1 covers it rows-only)."""
-    from gemproc2caom2_spark.plans.pipeline import curate
+    from gemproc2caom2_spark.plans.pipeline import ALL_STAGES, curate
 
     d = load(spark, sf_dir, "documents").select(
         F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
@@ -1422,7 +1413,7 @@ def cur3_flagship_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
         F.col("lang"),
     )
-    out = curate(d, dedup=False)
+    out = curate(d, stages=tuple(s for s in ALL_STAGES if s != "dedup"))
     return out.select(
         F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("bigint").alias("doc_id"),
         "lang_pred",
@@ -2246,21 +2237,16 @@ def _st2_bands_expr() -> "F.Column":
     shingles = TX.word_shingles(F.lower(F.col("text")), k=2)
     hashes = F.transform(F.array_distinct(shingles), hex15_hash)
 
-    def perm(i: int):
-        a, b = _perm_ab(i)
-        return F.array_min(
-            F.transform(
-                F.col("_hs"),
-                lambda h: (h % MERSENNE_61 % _M31 * a + b) % MERSENNE_61,
-            )
-        ).cast("string")
+    # hex15 hashes are non-negative, so minhash_perm's pmod equals the
+    # oracle's %
+    sig = minhash_signature_sql(F.col("_hs"), 16)
 
     def band(b: int):
         parts = []
         for i in range(4):
             if i:
                 parts.append(F.lit("_"))
-            parts.append(perm(4 * b + i))
+            parts.append(sig[4 * b + i].cast("string"))
         return hex15_hash(F.concat(F.lit(f"{b}:"), *parts))
 
     bands = F.array(*[band(b) for b in range(4)])
@@ -2864,7 +2850,6 @@ def eval1_keep_drop_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     labels = curate(
         d,
-        dedup=False,
         # scrub does not influence keep/drop — skipping the byte-kernel
         # stage makes the evaluation pass cheaper (task_types analog)
         stages=("collapse", "extract", "langid", "heuristics", "perplexity"),

@@ -14,6 +14,7 @@ is one SparkSession configured for the workload:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -103,13 +104,14 @@ def build_session(
 
 
 def _parse_local_cores(master: str) -> int:
-    """Best-effort core count from a local[N] master string."""
-    if master.startswith("local[") and master.endswith("]"):
-        inner = master[6:-1]
-        if inner == "*":
-            return os.cpu_count() or 4
-        try:
-            return int(inner)
-        except ValueError:
-            return 4
-    return 4
+    """Core count of a local master: ``local`` -> 1; ``local[N]`` and
+    ``local[N,F]`` (F = task failures allowed) -> N; ``local[*]`` and
+    ``local[*,F]`` -> the cpu count. Any other master -> 4."""
+    if master == "local":
+        return 1
+    m = re.fullmatch(r"local\[(\*|\d+)(?:,\d+)?\]", master)
+    if m is None:
+        return 4
+    if m.group(1) == "*":
+        return os.cpu_count() or 4
+    return int(m.group(1))

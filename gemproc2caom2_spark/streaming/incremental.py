@@ -69,8 +69,6 @@ def run_available_now(
             batch_df,
             rules=rules,
             num_partitions=None,  # micro-batches are small; no reshuffle
-            dedup=True,
-            persist_for_dedup=True,
         )
         out.write.mode("overwrite").parquet(f"{output_dir}/epoch_id={epoch_id}")
         # per-epoch cache release: a long stream must not accumulate one
@@ -100,7 +98,7 @@ def windowed_quality_stream(
     """
     from gemproc2caom2_spark.functions.langid import langid_expr
     from gemproc2caom2_spark.operators.heuristics import ANALYSIS_CAP, quality_struct
-    from gemproc2caom2_spark.plans.pipeline import cheap_drop_reason
+    from gemproc2caom2_spark.operators.verdict import cheap_drop_reason
 
     d = src.withColumn(
         "text_extracted", F.coalesce(F.col("text"), F.lit(""))

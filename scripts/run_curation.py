@@ -45,10 +45,9 @@ def main() -> int:
 
     spark = build_session(app_name="gemproc-curation", master=args.master)
     try:
-        n_part = args.partitions or 2 * spark.sparkContext.defaultParallelism
         df = spark.read.schema(INPUT_SCHEMA).parquet(args.input)
         run_id, n = run_incremental(
-            spark, df, args.output, run_id=args.run_id, num_partitions=n_part
+            spark, df, args.output, run_id=args.run_id, num_partitions=args.partitions
         )
         print(f"run_id={run_id} processed={n}")
         return 0

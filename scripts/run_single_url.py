@@ -47,14 +47,16 @@ def main() -> int:
         unknown = set(stages) - set(ALL_STAGES)
         if unknown:
             ap.error(f"unknown stages {sorted(unknown)}; valid: {ALL_STAGES}")
+    if args.no_dedup:
+        stages = tuple(s for s in stages if s != "dedup")
 
     spark = build_session(app_name="gemproc-single", master=args.master)
     try:
         df = spark.read.schema(INPUT_SCHEMA).parquet(args.input)
-        if args.no_dedup or "dedup" not in stages:
+        if "dedup" not in stages:
             # row-local chain only: filter first, no corpus state needed
             df = df.where(url_normalize("url") == args.url)
-        out = curate(df, dedup=not args.no_dedup, stages=stages)
+        out = curate(df, stages=stages)
         rows = out.where(F.col("url") == args.url).collect()
         for r in rows:
             d = r.asDict(recursive=True)

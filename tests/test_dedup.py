@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from gemproc2caom2_spark.functions.hashing import MERSENNE_61, minhash_signature_sql
 from gemproc2caom2_spark.operators.dedup import (
     make_minhash_udf,
     make_simhash_udf,
@@ -43,6 +44,22 @@ def test_minhash_udf_matches_column_expr(spark, docs):
     assert ra[1] != ra[4]
     # null text and <k-word docs both yield null signatures (no shingles)
     assert ra[5] is None and ra[6] is None
+
+    # hashes at the edges of the int64 range and of the M61 fold, one
+    # per row and all in one row: np.mod and pmod agree bit for bit
+    edges = [-(1 << 63), -1, 0, MERSENNE_61 - 1, MERSENNE_61, (1 << 63) - 1]
+    rows = [(i, [h]) for i, h in enumerate(edges)] + [(len(edges), edges)]
+    out = (
+        spark.createDataFrame(rows, "id int, h array<bigint>")
+        .select(
+            make_minhash_udf(128)("h").alias("udf"),
+            minhash_signature_sql(F.col("h"), 128).alias("col"),
+        )
+        .collect()
+    )
+    assert len(out) == len(rows)
+    for r in out:
+        assert r.udf is not None and r.udf == r.col
 
 
 def test_exact_dedup(spark, docs):
@@ -281,10 +298,12 @@ def test_cluster_representatives_quality_argmax(spark):
     assert len(reps) == 2
 
 
-def test_semantic_marking_flags_cosine_cluster(spark):
+@pytest.mark.parametrize("int_exact", [True, False])
+def test_semantic_marking_flags_cosine_cluster(spark, int_exact):
     """mark_semantic_duplicates flags vectors whose exact cosine to
     their bucket min clears the threshold, keeps the min as canonical,
-    and leaves dissimilar vectors unmarked."""
+    and leaves dissimilar vectors unmarked — through both the integer
+    and the sequential-float kernels."""
     from pyspark.sql import functions as F
 
     from gemproc2caom2_spark.operators.dedup import mark_semantic_duplicates
@@ -300,7 +319,7 @@ def test_semantic_marking_flags_cosine_cluster(spark):
     out = {
         r.vec_id: r
         for r in mark_semantic_duplicates(
-            df, threshold=0.99, bits=4, tables=8, dim=4, int_exact=True
+            df, threshold=0.99, bits=4, tables=8, dim=4, int_exact=int_exact
         ).collect()
     }
     assert out[2].is_duplicate and out[2].canonical_id == 1

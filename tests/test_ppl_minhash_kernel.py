@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from gemproc2caom2_spark.functions.perplexity import batch_perplexity, perplexity_of
 from gemproc2caom2_spark.operators.dedup import make_minhash_udf, shingle_hashes_expr
 from gemproc2caom2_spark.operators.heuristics import DEFAULT_RULES
-from gemproc2caom2_spark.plans.pipeline import curate, make_perplexity_minhash_udf
+from gemproc2caom2_spark.plans.pipeline import ALL_STAGES, curate, make_perplexity_minhash_udf
 from gemproc2caom2_spark.sources.datagen import INPUT_SCHEMA, generate_corpus
 from tests.gen_fixtures import spark_round6
 
@@ -85,7 +85,8 @@ def kept_doc(spark):
     """One input row with stored text that curate() keeps (from the
     golden corpus), and its raw perplexity."""
     corpus = generate_corpus(spark, 60)
-    kept = curate(corpus, num_partitions=4, dedup=False).where("keep").select("url")
+    no_dedup = tuple(s for s in ALL_STAGES if s != "dedup")
+    kept = curate(corpus, num_partitions=4, stages=no_dedup).where("keep").select("url")
     row = corpus.where("text IS NOT NULL").join(kept, "url").orderBy("url").first()
     raw = batch_perplexity([row.text])[0]
     assert not math.isnan(raw)

@@ -40,7 +40,7 @@ def test_stage_subsets(spark):
     assert out.where(F.col("quality.doc_len").isNotNull()).count() == 0
 
     # verdict-only minimal run still yields the full output schema
-    out = curate(df, stages=("heuristics",), dedup=False)
+    out = curate(df, stages=("heuristics",))
     assert set(out.columns) >= {"url", "keep", "drop_reason", "lineage"}
 
 
@@ -55,7 +55,8 @@ def test_recapture_collapse(spark):
         F.concat_ws(" ", F.col("text"), F.lit("RECAPTURED")).alias("text"),
         "lang",
     )
-    out = curate(df.unionByName(recap), dedup=False).collect()
+    no_dedup = tuple(s for s in ALL_STAGES if s != "dedup")
+    out = curate(df.unionByName(recap), stages=no_dedup).collect()
     assert len(out) == 15
     by_url = {r.url: r for r in out}
     recaptured = [r for r in out if r.scrubbed_text and "RECAPTURED" in r.scrubbed_text]
