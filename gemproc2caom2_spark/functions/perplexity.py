@@ -145,9 +145,10 @@ def batch_perplexity(texts, logp: np.ndarray | None = None,
     return out
 
 
-# the oracle-SQL regex for the rare-char set; the Spark side counts the
-# same set via translate() (per-char map lookup — scales linearly where
-# java.util.regex class counting stalls; see functions/text.SYMBOL_RE)
+# the oracle-SQL regex for the rare-char set (heuristics.quality_sql
+# runs it); the Spark side counts the same set via translate() (per-char
+# map lookup — scales linearly where java.util.regex class counting
+# stalls; see functions/text.SYMBOL_RE)
 RARE_RE = r"[^a-z \.,;:!?'\n-]"
 _RARE_ALLOWED = "abcdefghijklmnopqrstuvwxyz .,;:!?'\n-"
 

@@ -24,8 +24,8 @@ BPEISH_TOKEN_RE = r"[A-Za-z]+(?:'[A-Za-z]+)?|[0-9]+|[^\sA-Za-z0-9]"
 # "symbol" = anything outside letters / digits / whitespace / basic
 # sentence punctuation. High symbol ratio flags markup/encoding junk.
 # \w and \s are expanded to their explicit ASCII sets: identical
-# semantics in Java, RE2 and Python-ASCII. SYMBOL_RE is what external
-# SQL oracles run; the Spark side counts the SAME set via translate()
+# semantics in Java, RE2 and Python-ASCII. SYMBOL_RE is what the SQL
+# oracle runs (heuristics.quality_sql); the Spark side counts the SAME set via translate()
 # (delete every allowed char, measure what's left): java.util.regex
 # counting of this class measured 10x slower per byte than translate
 # AND flat from 2 to 8 cores (a shared-resource stall), while translate

@@ -33,6 +33,7 @@ from gemproc2caom2_spark.operators.heuristics import (
     RuleConfig,
     quality_struct,
 )
+from gemproc2caom2_spark.operators.verdict import metric_drop_reason
 
 # feature name -> (Spark expr from a quality struct col, SQL expr from
 # the oracle CTE's metric fields). Both sides MUST stay in this order:
@@ -65,22 +66,12 @@ def feature_sql(doc_len: str, n_words: str, symbol: str, repeated: str,
 
 def _rule_label(q: Column, rules: RuleConfig) -> Column:
     """The quality-gate half of the heuristic verdict (the distillation
-    target): 1 when every metric gate passes. Language/placeholder/
-    perplexity gates are excluded — they are not functions of these
-    features, and a distilled model should only be asked to learn what
-    its inputs determine."""
-    keep = (
-        (q.getField("doc_len") >= rules.min_doc_len)
-        & (q.getField("doc_len") <= rules.max_doc_len)
-        & (q.getField("n_words") >= rules.min_words)
-        & (F.coalesce(q.getField("symbol_ratio"), F.lit(0.0))
-           <= rules.max_symbol_ratio)
-        & (F.coalesce(q.getField("repeated_line_frac"), F.lit(0.0))
-           <= rules.max_repeated_line_frac)
-        & (F.coalesce(q.getField("rare_char_ratio"), F.lit(0.0))
-           <= rules.max_rare_char_ratio)
-    )
-    return F.coalesce(keep, F.lit(False)).cast("double")
+    target): 1 when no metric gate of operators/verdict fires
+    (``metric_drop_reason``), with the verdict's own thresholds and
+    null rule. Language/placeholder/perplexity gates are excluded — they
+    are not functions of these features, and a distilled model should
+    only be asked to learn what its inputs determine."""
+    return metric_drop_reason(q, rules).isNull().cast("double")
 
 
 def train_quality_classifier(

@@ -23,14 +23,16 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from gemproc2caom2_spark.functions import text as TX
-from gemproc2caom2_spark.functions.perplexity import unigram_surprisal_expr
+from gemproc2caom2_spark.functions.perplexity import RARE_RE, unigram_surprisal_expr
 
 
 @dataclass(frozen=True)
 class RuleConfig:
     """Broadcast rule table (blueprint analog). One instance drives both
-    the Spark plan and the SQL oracle rendering, so thresholds can never
-    diverge between engines."""
+    engines: the Spark gates (operators/verdict._text_gates) and the
+    DuckDB oracle gates (verdict._text_gates_sql) read their thresholds,
+    markers and target languages from it, so the engines cannot diverge
+    on a threshold."""
 
     min_doc_len: int = 120          # chars
     max_doc_len: int = 200_000
@@ -112,6 +114,36 @@ def quality_struct(text: Column | str, exact_len: Column | None = None) -> Colum
         ).alias("repeated_line_frac"),
         unigram_surprisal_expr(t).alias("rare_char_ratio"),
     )
+
+
+def quality_sql() -> str:
+    """DuckDB rendering of quality_struct: every column of ``documents``
+    plus doc_len, n_words, symbol_ratio, rare_char_ratio, the ``lines``
+    list, mean_line_len and repeated_line_frac, computed from its
+    ``text`` column over the same ANALYSIS_CAP prefix. The metric bodies
+    are hand-written SQL (the oracle stays independent of the Column
+    code); the cap and the character classes are shared."""
+    t = f"substring(text, 1, {ANALYSIS_CAP})"
+    sym = TX.SYMBOL_RE.replace("'", "''")
+    rare = RARE_RE.replace("'", "''")
+    return f"""
+      SELECT *,
+             CASE WHEN len(lines) > 0
+                  THEN list_sum(list_transform(lines, x -> length(x)))::DOUBLE / len(lines)
+                  END AS mean_line_len,
+             CASE WHEN len(lines) > 0
+                  THEN 1.0 - len(list_distinct(lines))::DOUBLE / len(lines)
+                  END AS repeated_line_frac
+      FROM (
+        SELECT *,
+               length(text)::BIGINT AS doc_len,
+               coalesce(length(regexp_extract_all({t}, '\\S+')), 0)::BIGINT AS n_words,
+               length(regexp_extract_all({t}, '{sym}')) / nullif(length({t}), 0) AS symbol_ratio,
+               length(regexp_extract_all(lower({t}), '{rare}'))
+                 / nullif(length({t}), 0) AS rare_char_ratio,
+               list_filter(list_transform(string_split({t}, chr(10)), x -> trim(x)),
+                           x -> x <> '') AS lines
+        FROM documents)"""
 
 
 def null_quality_struct() -> Column:
@@ -255,6 +287,13 @@ def placeholder_flag(text: Column | str, rules: RuleConfig = DEFAULT_RULES) -> C
     for marker in rules.placeholder_markers:
         cond = cond | t.contains(marker)
     return cond
+
+
+def placeholder_sql(rules: RuleConfig = DEFAULT_RULES) -> str:
+    """DuckDB rendering of placeholder_flag over a ``text`` column."""
+    t = f"lower(substring(text, 1, {ANALYSIS_CAP}))"
+    quoted = (m.replace("'", "''") for m in rules.placeholder_markers)
+    return " OR ".join(f"contains({t}, '{m}')" for m in quoted) or "FALSE"
 
 
 def make_compression_ratio_udf(level: int = 6, cap: int = ANALYSIS_CAP):

@@ -22,9 +22,21 @@ from gemproc2caom2_spark.functions.langid import langid_expr, langid_sql
 from gemproc2caom2_spark.functions.scrub import scrub_expr, scrub_sql
 from gemproc2caom2_spark.functions import text as TX
 from gemproc2caom2_spark.operators.dedup import ngram_jaccard_pairs, normalized_fingerprint
-from gemproc2caom2_spark.operators.heuristics import LANGID_CAP, quality_struct
+from gemproc2caom2_spark.operators.heuristics import (
+    ANALYSIS_CAP,
+    DEFAULT_RULES,
+    LANGID_CAP,
+    RuleConfig,
+    quality_sql,
+    quality_struct,
+)
 from gemproc2caom2_spark.operators.multimodal import decode_media_features
 from gemproc2caom2_spark.operators.similarity import brute_force_topk, lsh_ann_topk
+from gemproc2caom2_spark.operators.verdict import (
+    cheap_drop_reason,
+    cheap_drop_reason_sql,
+    drop_reason_sql,
+)
 from gemproc2caom2_spark.plans.queries import load, register
 
 # ---------------------------------------------------------------------------
@@ -995,29 +1007,13 @@ def tx1_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tx2_quality_metrics",
-    # all metrics except doc_len are computed over the first
-    # ANALYSIS_CAP=16384 chars, mirroring heuristics.quality_struct
     f"""
-    WITH l AS (
-      SELECT doc_id, text, substring(text, 1, 16384) AS t,
-             list_filter(list_transform(
-                 string_split(substring(text, 1, 16384), chr(10)), x -> trim(x)),
-                         x -> x <> '') AS lines
-      FROM documents)
-    SELECT doc_id,
-           length(text)::BIGINT AS doc_len,
-           coalesce(length(regexp_extract_all(t, '\\S+')), 0)::BIGINT AS n_words,
-           round(length(regexp_extract_all(t, '[^A-Za-z0-9_ \t\n\x0B\f\r.,;:!?''"()\\-]'))
-                 / length(t), 6) AS symbol_ratio,
-           round(length(regexp_extract_all(lower(t), '[^a-z \\.,;:!?''\\n-]'))
-                 / length(t), 6) AS rare_char_ratio,
-           round(CASE WHEN len(lines) > 0
-                 THEN list_sum(list_transform(lines, x -> length(x)))::DOUBLE / len(lines)
-                 END, 6) AS mean_line_len,
-           round(CASE WHEN len(lines) > 0
-                 THEN 1.0 - len(list_distinct(lines))::DOUBLE / len(lines)
-                 END, 6) AS repeated_line_frac
-    FROM l WHERE length(text) > 0
+    SELECT doc_id, doc_len, n_words,
+           round(symbol_ratio, 6) AS symbol_ratio,
+           round(rare_char_ratio, 6) AS rare_char_ratio,
+           round(mean_line_len, 6) AS mean_line_len,
+           round(repeated_line_frac, 6) AS repeated_line_frac
+    FROM ({quality_sql()}) WHERE length(text) > 0
     """,
 )
 def tx2_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1255,75 +1251,68 @@ def mm4_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # curation verdict over the documents table
 # ===========================================================================
 
-_Q_LINES = (
-    "list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)), x -> x <> '')"
-)
+def _as_pages(df: DataFrame) -> DataFrame:
+    """documents rows in curate()'s web-page input schema: the url is
+    synthesized from source and doc_id, the html is the text's bytes."""
+    return df.select(
+        F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
+                 F.col("doc_id").cast("string")).alias("url"),
+        F.lit("2025-07-01 00:00:00").cast("timestamp").alias("warc_ts"),
+        F.encode(F.col("text"), "utf-8").alias("html"),
+        F.col("text"),
+        F.col("lang"),
+    )
+
+
+def _verdict_ctes(rules: RuleConfig = DEFAULT_RULES) -> str:
+    """The verdict CTE chain of the oracles, m -> v -> f -> p:
+    quality_sql's metrics and lang_pred over the LANGID_CAP prefix, the
+    cheap text-gate verdict ``cheap``, the fixture perplexity of the
+    docs that pass it (keyed by md5(text)), and the full verdict
+    ``drop_reason`` with the perplexity gate. Every column of
+    ``documents`` rides along (cur1 rebuilds the url from ``source``)."""
+    return f"""
+    WITH m AS (
+      SELECT *, {langid_sql(f"substring(text, 1, {LANGID_CAP})")} AS lang_pred
+      FROM ({quality_sql()})),
+    v AS (SELECT *, {cheap_drop_reason_sql(rules)} AS cheap FROM m),
+    f AS (
+      SELECT v.*, CASE WHEN v.cheap IS NULL THEN fx.ppl_r6 END AS perplexity
+      FROM v LEFT JOIN read_parquet('{_PPL_FIXTURE}') fx
+        ON md5(v.text) = fx.text_md5),
+    p AS (SELECT *, {drop_reason_sql("perplexity", rules=rules)} AS drop_reason FROM f)
+"""
+
+
+_VERDICT_CTES = _verdict_ctes()
 
 
 @register(
     "cur2_heuristic_verdict",
-    f"""
-    WITH m AS (
-      SELECT doc_id, text,
-             length(text) AS doc_len,
-             -- n_words / symbol_ratio over the ANALYSIS_CAP=16384 prefix,
-             -- mirroring heuristics.quality_struct; doc_len stays exact
-             coalesce(length(regexp_extract_all(substring(text, 1, 16384), '\\S+')), 0) AS n_words,
-             length(regexp_extract_all(substring(text, 1, 16384), '[^A-Za-z0-9_ \t\n\x0B\f\r.,;:!?''"()\\-]'))
-               / nullif(length(substring(text, 1, 16384)), 0) AS symbol_ratio,
-             {langid_sql('text')} AS lang_pred
-      FROM documents)
-    SELECT doc_id, lang_pred,
-           CASE WHEN doc_len IS NULL OR doc_len = 0 THEN 'empty'
-                WHEN doc_len < 120 THEN 'min_length'
-                WHEN doc_len > 200000 THEN 'max_length'
-                WHEN n_words < 20 THEN 'min_words'
-                WHEN lower(text) LIKE '%lorem ipsum%'
-                     OR lower(text) LIKE '%under construction%' THEN 'placeholder'
-                WHEN lang_pred <> 'en' THEN 'langid'
-                WHEN symbol_ratio > 0.10 THEN 'symbol_ratio'
-                ELSE NULL END AS drop_reason,
-           (CASE WHEN doc_len IS NULL OR doc_len = 0 THEN 'empty'
-                WHEN doc_len < 120 THEN 'min_length'
-                WHEN doc_len > 200000 THEN 'max_length'
-                WHEN n_words < 20 THEN 'min_words'
-                WHEN lower(text) LIKE '%lorem ipsum%'
-                     OR lower(text) LIKE '%under construction%' THEN 'placeholder'
-                WHEN lang_pred <> 'en' THEN 'langid'
-                WHEN symbol_ratio > 0.10 THEN 'symbol_ratio'
-                ELSE NULL END IS NULL) AS keep,
+    _VERDICT_CTES
+    + f"""
+    SELECT doc_id, lang_pred, cheap AS drop_reason, (cheap IS NULL) AS keep,
            {scrub_sql('text')} AS scrubbed_text
-    FROM m
+    FROM v
     """,
 )
 def cur2_heuristic_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Column-expression core of the curation verdict (everything
-    except the Arrow perplexity stage and corpus-level dedup), applied
-    to the documents table — fully oracle-checkable keep/drop + scrub."""
-    from gemproc2caom2_spark.operators.heuristics import DEFAULT_RULES, quality_struct
-    from gemproc2caom2_spark.operators.verdict import first_failing
-
-    rules = DEFAULT_RULES
-    d = load(spark, sf_dir, "documents", spread=True)
-    q = quality_struct("text")
-    lang = langid_expr("text")
-    d = d.select("doc_id", "text", q.alias("q"), lang.alias("lang_pred"))
-    text = F.col("text")
-    # not verdict's gate list: this oracle looks for the placeholder
-    # markers in the WHOLE text, the curate() gate in the capped prefix
-    placeholder = F.lower(text).contains("lorem ipsum") | F.lower(text).contains(
-        "under construction"
+    """The Column-expression core of curate()'s verdict —
+    verdict.cheap_drop_reason over quality_struct and langid on the
+    LANGID_CAP prefix, i.e. everything except the Arrow perplexity
+    stage and corpus-level dedup — applied to the documents table:
+    oracle-checked keep/drop + scrub. The oracle's ``cheap`` column is
+    the rendering of the same gate list, so a change to either engine's
+    gates breaks parity."""
+    d = load(spark, sf_dir, "documents", spread=True).select(
+        "doc_id",
+        "text",
+        quality_struct("text").alias("q"),
+        langid_expr(F.substring("text", 1, LANGID_CAP)).alias("lang_pred"),
     )
-    checks = [
-        ("empty", text.isNull() | (F.length(text) == 0)),
-        ("min_length", F.col("q.doc_len") < rules.min_doc_len),
-        ("max_length", F.col("q.doc_len") > rules.max_doc_len),
-        ("min_words", F.col("q.n_words") < rules.min_words),
-        ("placeholder", placeholder),
-        ("langid", F.col("lang_pred") != "en"),
-        ("symbol_ratio", F.col("q.symbol_ratio") > rules.max_symbol_ratio),
-    ]
-    reason = first_failing(checks)
+    reason = cheap_drop_reason(
+        F.col("text"), F.col("q"), F.col("lang_pred"), DEFAULT_RULES
+    )
     return d.select(
         "doc_id",
         "lang_pred",
@@ -1333,63 +1322,11 @@ def cur2_heuristic_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ANALYSIS_CAP / LANGID_CAP prefixes, mirroring heuristics.py
-_T16 = "substring(text, 1, 16384)"
-_T4 = "substring(text, 1, 2048)"  # LANGID_CAP, mirroring heuristics.py
-
-# the full cheap-gate + perplexity verdict CTE chain, shared by the cur3
-# and cur1 oracles (m -> c -> v -> p; `source` rides along so cur1 can
-# rebuild the synthesized url)
-_VERDICT_CTES = f"""
-    WITH m AS (
-      SELECT doc_id, text, source,
-             length(text) AS doc_len,
-             coalesce(length(regexp_extract_all({_T16}, '\\S+')), 0) AS n_words,
-             length(regexp_extract_all({_T16}, '[^A-Za-z0-9_ \t\n\x0B\f\r.,;:!?''"()\\-]'))
-               / nullif(length({_T16}), 0) AS symbol_ratio,
-             length(regexp_extract_all(lower({_T16}), '[^a-z \\.,;:!?''\\n-]'))
-               / nullif(length({_T16}), 0) AS rare_char_ratio,
-             list_filter(list_transform(string_split({_T16}, chr(10)), x -> trim(x)),
-                         x -> x <> '') AS lines,
-             {langid_sql(_T4)} AS lang_pred
-      FROM documents),
-    c AS (
-      SELECT *,
-             CASE WHEN len(lines) > 0
-                  THEN 1.0 - len(list_distinct(lines))::DOUBLE / len(lines)
-                  END AS repeated_line_frac
-      FROM m),
-    v AS (
-      SELECT *,
-             CASE WHEN text IS NULL OR doc_len = 0 THEN 'empty'
-                  WHEN doc_len < 120 THEN 'min_length'
-                  WHEN doc_len > 200000 THEN 'max_length'
-                  WHEN n_words < 20 THEN 'min_words'
-                  WHEN lower({_T16}) LIKE '%lorem ipsum%'
-                       OR lower({_T16}) LIKE '%under construction%' THEN 'placeholder'
-                  WHEN lang_pred <> 'en' THEN 'langid'
-                  WHEN symbol_ratio > 0.10 THEN 'symbol_ratio'
-                  WHEN rare_char_ratio > 0.25 THEN 'rare_chars'
-                  WHEN repeated_line_frac > 0.30 THEN 'repeated_lines'
-                  ELSE NULL END AS cheap
-      FROM c),
-    p AS (
-      SELECT v.*,
-             CASE WHEN v.cheap IS NULL THEN fx.ppl_r6 END AS perplexity
-      FROM v LEFT JOIN read_parquet('{_PPL_FIXTURE}') fx
-        ON md5(v.text) = fx.text_md5)
-"""
-
-
 @register(
     "cur3_flagship_oracle",
     _VERDICT_CTES
     + f"""
-    SELECT doc_id, lang_pred,
-           coalesce(cheap, CASE WHEN perplexity > 60.0 THEN 'perplexity' END)
-             AS drop_reason,
-           (coalesce(cheap, CASE WHEN perplexity > 60.0 THEN 'perplexity' END)
-             IS NULL) AS keep,
+    SELECT doc_id, lang_pred, drop_reason, (drop_reason IS NULL) AS keep,
            perplexity,
            CASE WHEN cheap IS NULL THEN {scrub_sql('text')} END AS scrubbed_text
     FROM p
@@ -1405,14 +1342,7 @@ def cur3_flagship_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH on xxhash64 is not SQL-replicable; cur1 covers it rows-only)."""
     from gemproc2caom2_spark.plans.pipeline import ALL_STAGES, curate
 
-    d = load(spark, sf_dir, "documents").select(
-        F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit("2025-07-01 00:00:00").cast("timestamp").alias("warc_ts"),
-        F.encode(F.col("text"), "utf-8").alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )
+    d = _as_pages(load(spark, sf_dir, "documents"))
     out = curate(d, stages=tuple(s for s in ALL_STAGES if s != "dedup"))
     return out.select(
         F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("bigint").alias("doc_id"),
@@ -1429,22 +1359,17 @@ def cur3_flagship_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     _VERDICT_CTES
     + f"""
     , d AS (
-      SELECT p.*, (dd.doc_id IS NOT NULL) AS is_dup
-      FROM p LEFT JOIN read_parquet('{_DUP_FIXTURE}') dd
-        ON dd.doc_id = p.doc_id
-       AND dd.corpus_md5 = (SELECT md5(string_agg(md5(coalesce(text, '')),
-                                                  '' ORDER BY doc_id))
-                            FROM documents))
+      SELECT * REPLACE ({drop_reason_sql("perplexity", "is_dup")} AS drop_reason)
+      FROM (
+        SELECT p.*, (dd.doc_id IS NOT NULL) AS is_dup
+        FROM p LEFT JOIN read_parquet('{_DUP_FIXTURE}') dd
+          ON dd.doc_id = p.doc_id
+         AND dd.corpus_md5 = (SELECT md5(string_agg(md5(coalesce(text, '')),
+                                                    '' ORDER BY doc_id))
+                              FROM documents)))
     SELECT 'https://' || lower(source) || '.example/doc/' || doc_id AS url,
-           lang_pred,
-           (coalesce(cheap,
-                     CASE WHEN perplexity > 60.0 THEN 'perplexity' END,
-                     CASE WHEN is_dup THEN 'duplicate' END) IS NULL) AS keep,
-           coalesce(cheap,
-                    CASE WHEN perplexity > 60.0 THEN 'perplexity' END,
-                    CASE WHEN is_dup THEN 'duplicate' END) AS drop_reason,
-           perplexity,
-           length(text)::BIGINT AS doc_len
+           lang_pred, (drop_reason IS NULL) AS keep, drop_reason, perplexity,
+           doc_len
     FROM d
     """,
 )
@@ -1462,15 +1387,7 @@ def cur1_flagship_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_main_app.py:171-186)."""
     from gemproc2caom2_spark.plans.pipeline import curate
 
-    d = load(spark, sf_dir, "documents").select(
-        F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit("2025-07-01 00:00:00").cast("timestamp").alias("warc_ts"),
-        F.encode(F.col("text"), "utf-8").alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )
-    out = curate(d, num_partitions=None)
+    out = curate(_as_pages(load(spark, sf_dir, "documents")), num_partitions=None)
     return out.select(
         "url", "lang_pred", "keep", "drop_reason", "perplexity",
         F.col("quality").getField("doc_len").alias("doc_len"),
@@ -1479,38 +1396,12 @@ def cur1_flagship_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "v9_rejected_verdict",
-    f"""
-    WITH m AS (
-      SELECT doc_id, text,
-             (doc_id % 10 = 0) AS rejected,
-             length(text) AS doc_len,
-             coalesce(length(regexp_extract_all({_T16}, '\\S+')), 0) AS n_words,
-             length(regexp_extract_all({_T16}, '[^A-Za-z0-9_ \t\n\x0B\f\r.,;:!?''"()\\-]'))
-               / nullif(length({_T16}), 0) AS symbol_ratio,
-             length(regexp_extract_all(lower({_T16}), '[^a-z \\.,;:!?''\\n-]'))
-               / nullif(length({_T16}), 0) AS rare_char_ratio,
-             list_filter(list_transform(string_split({_T16}, chr(10)), x -> trim(x)),
-                         x -> x <> '') AS lines,
-             {langid_sql(_T4)} AS lang_pred
-      FROM documents),
-    v AS (
-      SELECT doc_id,
-             CASE WHEN text IS NULL OR doc_len = 0 THEN 'empty'
-                  WHEN rejected THEN 'rejected'
-                  WHEN doc_len < 120 THEN 'min_length'
-                  WHEN doc_len > 200000 THEN 'max_length'
-                  WHEN n_words < 20 THEN 'min_words'
-                  WHEN lower({_T16}) LIKE '%lorem ipsum%'
-                       OR lower({_T16}) LIKE '%under construction%' THEN 'placeholder'
-                  WHEN lang_pred <> 'en' THEN 'langid'
-                  WHEN symbol_ratio > 0.10 THEN 'symbol_ratio'
-                  WHEN rare_char_ratio > 0.25 THEN 'rare_chars'
-                  WHEN CASE WHEN len(lines) > 0
-                       THEN 1.0 - len(list_distinct(lines))::DOUBLE / len(lines)
-                       END > 0.30 THEN 'repeated_lines'
-                  ELSE NULL END AS drop_reason
+    _VERDICT_CTES
+    + f"""
+    , r AS (
+      SELECT doc_id, {drop_reason_sql(is_rejected="doc_id % 10 = 0")} AS drop_reason
       FROM m)
-    SELECT doc_id, drop_reason, (drop_reason IS NULL) AS keep FROM v
+    SELECT doc_id, drop_reason, (drop_reason IS NULL) AS keep FROM r
     """,
 )
 def v9_rejected_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1522,7 +1413,6 @@ def v9_rejected_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop_reason='rejected', outranked only by 'empty'. Resume-time
     suppression of rejected rows is pinned by tests/test_checkpoint.py
     (ST4)."""
-    from gemproc2caom2_spark.functions.langid import langid_expr
     from gemproc2caom2_spark.operators.verdict import with_verdict
 
     d = load(spark, sf_dir, "documents", spread=True).select(
@@ -1584,11 +1474,7 @@ def k3_preview_sideoutput(spark: SparkSession, sf_dir: str) -> DataFrame:
     "k5_ledger_compaction",
     _VERDICT_CTES
     + """
-    SELECT doc_id, lang_pred,
-           coalesce(cheap, CASE WHEN perplexity > 60.0 THEN 'perplexity' END)
-             AS drop_reason,
-           (coalesce(cheap, CASE WHEN perplexity > 60.0 THEN 'perplexity' END)
-             IS NULL) AS keep,
+    SELECT doc_id, lang_pred, drop_reason, (drop_reason IS NULL) AS keep,
            perplexity
     FROM p
     """,
@@ -1622,21 +1508,11 @@ def k5_ledger_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = load(spark, sf_dir, "documents")
 
-    def to_input(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
-                     F.col("doc_id").cast("string")).alias("url"),
-            F.lit("2025-07-01 00:00:00").cast("timestamp").alias("warc_ts"),
-            F.encode(F.col("text"), "utf-8").alias("html"),
-            F.col("text"),
-            F.col("lang"),
-        )
-
-    run_incremental(spark, to_input(docs.where(F.col("doc_id") % 2 == 0)),
+    run_incremental(spark, _as_pages(docs.where(F.col("doc_id") % 2 == 0)),
                     root, run_id="half-a", dedup=False)
-    run_incremental(spark, to_input(docs.where(F.col("doc_id") % 2 == 1)),
+    run_incremental(spark, _as_pages(docs.where(F.col("doc_id") % 2 == 1)),
                     root, run_id="half-b", dedup=False)
-    _, n_resume = run_incremental(spark, to_input(docs), root,
+    _, n_resume = run_incremental(spark, _as_pages(docs), root,
                                   run_id="resume", dedup=False)
     if n_resume != 0:
         raise ValueError(f"resume run reprocessed {n_resume} rows")
@@ -2036,11 +1912,11 @@ def tx9_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _tx10_oracle_sql() -> str:
     """DuckDB rendering of repetition_struct: same capped tokenization
-    as the minhash shingles (_SQL_WORDS over the 16384-char prefix),
+    as the minhash shingles (_SQL_WORDS over the ANALYSIS_CAP prefix),
     same rounded-before-compare duplicate fractions."""
     from gemproc2caom2_spark.operators.heuristics import REPETITION_THRESHOLDS
 
-    ws = "regexp_split_to_array(trim(lower(substring(text, 1, 16384))), '\\s+')"
+    ws = f"regexp_split_to_array(trim(lower(substring(text, 1, {ANALYSIS_CAP}))), '\\s+')"
     cols, flags = [], []
     for k in (2, 3, 4):
         parts = " || ' ' || ".join(f"ws[i + {j}]" for j in range(k))
@@ -2799,11 +2675,7 @@ def _eval1_oracle_sql() -> str:
     return (
         _VERDICT_CTES
         + f"""
-    , lbl AS (
-      SELECT doc_id,
-             (coalesce(cheap, CASE WHEN perplexity > 60.0
-                                   THEN 'perplexity' END) IS NULL) AS keep
-      FROM p),
+    , lbl AS (SELECT doc_id, (drop_reason IS NULL) AS keep FROM p),
     mdl AS (
       SELECT p.doc_id, ({logit} > 0) AS mk
       FROM p CROSS JOIN read_parquet('{_QLR_FIXTURE}') fx
@@ -2839,17 +2711,8 @@ def eval1_keep_drop_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gemproc2caom2_spark.plans.pipeline import curate
 
-    d0 = load(spark, sf_dir, "documents")
-    d = d0.select(
-        F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit("2025-07-01 00:00:00").cast("timestamp").alias("warc_ts"),
-        F.encode(F.col("text"), "utf-8").alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )
     labels = curate(
-        d,
+        _as_pages(load(spark, sf_dir, "documents")),
         # scrub does not influence keep/drop — skipping the byte-kernel
         # stage makes the evaluation pass cheaper (task_types analog)
         stages=("collapse", "extract", "langid", "heuristics", "perplexity"),
